@@ -6,11 +6,15 @@
         [--export-types a,b,...]
 
 ``--ledgers-dir`` points at raw LedgerCloseMeta XDR files (one file per
-ledger — the reference's datastore layout, utils/main.go:981-984); the CLI
-runs the real bronze → silver decode and the same export pipelines the
-library exposes (plans/pipelines.py).  ``get_ledger_range_from_times``
-takes ``--start-time/--end-time`` (RFC3339 or unix seconds) instead of a
-ledger range, mirroring cmd/get_ledger_range_from_times.go.
+ledger — the reference's datastore layout, utils/main.go:981-984).  The CLI
+feeds the raw file bytes straight to the silver decode (sources/silver.py;
+each silver table parses each ledger once, as input/ledgers.go:25 does)
+and runs the same export pipelines the library exposes
+(plans/pipelines.py).  The ``rows`` it prints is the count observed inside
+the write job itself, so an export is not re-run to count it.
+``get_ledger_range_from_times`` takes ``--start-time/--end-time`` (RFC3339
+or unix seconds) instead of a ledger range, mirroring
+cmd/get_ledger_range_from_times.go.
 
 Flag names follow internal/utils/main.go:231-288 where a Spark engine has
 an equivalent; captive-core/GCS-credential flags are intentionally absent
@@ -87,16 +91,16 @@ def main(argv: list[str] | None = None) -> None:
     fmt = "both" if args.both else ("parquet" if args.parquet else "json")
     extra = _parse_extra_fields(args.extra_fields) or None
 
+    from pyspark.sql import functions as F
+
     from stellar_etl_spark.session import get_spark
-    from stellar_etl_spark.sources.bronze import (
-        decode_ledger_files,
-        read_ledger_files,
-    )
-    from stellar_etl_spark.sources import silver
+    from stellar_etl_spark.sources.bronze import read_ledger_files
 
     spark = get_spark("stellar-etl-cli", cpus=args.cpus)
     spark.sparkContext.setLogLevel("WARN")
-    bronze = decode_ledger_files(read_ledger_files(spark, args.ledgers_dir))
+    raw = read_ledger_files(spark, args.ledgers_dir).select(
+        F.col("content").alias("lcm_xdr")
+    )
 
     cmd, out = args.command, args.output
     s, e = args.start_ledger, args.end_ledger
@@ -134,10 +138,11 @@ def main(argv: list[str] | None = None) -> None:
         spark.stop()
         return
 
-    df = _dispatch(bronze)
+    df = _dispatch(raw)
     if df is not None:
-        # PrintTransformStats parity (cmd/command_utils.go:90-103)
-        n = df.count()
+        # PrintTransformStats parity (cmd/command_utils.go:90-103), from
+        # the write job itself
+        n = df.export_stats["successful"]
         print(json.dumps({"command": cmd, "rows": n, "output": out, "fmt": fmt}))
     spark.stop()
 

@@ -7,8 +7,12 @@ Each pipeline = silver-input DataFrames → transform (transforms/*) → sink
 partition-prunable filter, and write JSONL and/or Parquet exactly like
 ``ExportEntry``/``WriteParquet`` (cmd/command_utils.go).
 
-Shape notes: every pipeline is one Spark job; the range filter reaches the
-scan; only the aggregation/explode steps shuffle (see tests/test_plans.py).
+Shape notes: a table export runs one write job per output format, plus one
+job per broadcast join side, and no count job — the rows written are
+observed inside the write job (sources/sinks.export_with_stats).
+``export_transactions`` is two jobs: the ledgers broadcast and the write.
+The range filter reaches the scan; only the aggregation/explode steps
+shuffle (see tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -20,7 +24,7 @@ from pyspark.sql import functions as F
 
 from stellar_etl_spark.operators.compaction import compact_changes
 from stellar_etl_spark.operators.ranges import ledger_range_for_times
-from stellar_etl_spark.sources.sinks import export_jsonl, export_parquet
+from stellar_etl_spark.sources.sinks import export_with_stats
 from stellar_etl_spark.streaming.micro_batch import DEFAULT_BATCH_LEDGERS, batch_id_col
 from stellar_etl_spark.transforms import (
     transform_asset,
@@ -54,11 +58,15 @@ def _sink(
     extra_fields: dict[str, object] | None = None,
     mode: str = "overwrite",
 ) -> DataFrame:
+    """Write ``df`` as ``<name>.jsonl`` and/or ``<name>.parquet`` and return
+    it, with the transform stats observed in the write job as
+    ``df.export_stats``."""
     path = os.path.join(out_dir, name)
-    if fmt in ("json", "both"):
-        export_jsonl(df, path + ".jsonl", extra_fields, mode=mode)
-    if fmt in ("parquet", "both"):
-        export_parquet(df, path + ".parquet", extra_fields, mode=mode)
+    for f, ext in (("json", ".jsonl"), ("parquet", ".parquet")):
+        if fmt in (f, "both"):
+            df.export_stats = export_with_stats(
+                df, path + ext, F.lit(True), f, extra_fields, mode
+            )
     return df
 
 

@@ -92,8 +92,9 @@ def _list_ledger_files(path: str, start: int, end: int) -> list[tuple[int, str]]
 
 
 def _decode_file(seq: int, filepath: str):
-    """One output row from one ledger file (fake-decoder semantics shared
-    with sources.bronze.fake_lcm_decoder)."""
+    """One output row from one ledger file: the sequence from the file name
+    (as planned), the other header fields from the shared stand-in
+    sources.bronze.fake_lcm_decoder."""
     import datetime as dt
 
     from stellar_etl_spark.sources.bronze import fake_lcm_decoder
@@ -102,7 +103,7 @@ def _decode_file(seq: int, filepath: str):
         raw = fh.read()
     d = fake_lcm_decoder(raw)
     return (
-        d["sequence"],
+        seq,
         dt.datetime.fromtimestamp(d["closed_at_unix"], dt.timezone.utc).replace(
             tzinfo=None
         ),

@@ -2,12 +2,13 @@
 and operation rows (reference: input/ledgers.go normalization feeding
 transform_transaction / transform_operation).
 
-``decode_transactions`` / ``decode_operations`` run the pure-Python XDR
-parser (sources/xdr.py) in one Arrow-batched ``mapInPandas`` pass over the
-bronze table and emit rows in the TRANSACTIONS_DDL / OPERATIONS_DDL shapes
-the entity transforms consume — so the full pipeline
-``ledger files → bronze → silver → history_* tables`` runs on real wire
-bytes with no SDK.
+Each ``decode_*`` runs the pure-Python XDR parser (sources/xdr.py) in one
+Arrow-batched ``mapInPandas`` pass (``_per_ledger``) over the ``lcm_xdr``
+bytes of its input — the raw ledger files as the CLI reads them, or the
+bronze table — parsing each ledger once, and emits rows in the shapes the
+entity transforms consume — so the full pipeline
+``ledger files → silver → history_* tables`` runs on real wire bytes with
+no SDK.
 
 The full ingestion surface is decoded (sources/xdr.py + xdr_ledger.py):
 
@@ -34,7 +35,7 @@ in tests/test_golden_parity.py.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
@@ -621,43 +622,54 @@ def _match_processing(meta: dict, passphrase: str) -> list[tuple]:
     return out
 
 
+def _per_ledger(
+    bronze: DataFrame,
+    schema: str,
+    ledger_rows: Callable[[dict], Iterable],
+    tx_processing: bool = True,
+    exact_int64: tuple[str, ...] = (),
+) -> DataFrame:
+    """The silver batch loop every ``decode_*`` shares: one Arrow-batched
+    ``mapInPandas`` pass over ``bronze["lcm_xdr"]`` that parses each ledger
+    once and collects the table's ``ledger_rows(meta)``.  A batch without
+    rows yields no frame (an empty pandas frame carries no column types, so
+    Arrow could not convert its array columns)."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                row
+                for raw in pdf["lcm_xdr"]
+                for row in ledger_rows(
+                    parse_ledger_close_meta(bytes(raw), tx_processing=tx_processing)
+                )
+            ]
+            if rows:
+                yield _exact_int64_frame(rows, exact_int64)
+
+    return bronze.select("lcm_xdr").mapInPandas(gen, schema=schema)
+
+
 def decode_transactions(
     bronze: DataFrame, passphrase: str = "Public Global Stellar Network ; September 2015"
 ) -> DataFrame:
     """One TRANSACTIONS_DDL row per envelope (GetTransactions surface,
     input/transactions.go) from raw LCM bytes — results, fees, soroban fee
     ext, and the four canonical base64 blobs filled from txProcessing."""
-    import pandas as pd
 
-    schema = TRANSACTIONS_DDL + ", closed_at_unix long"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for raw in pdf["lcm_xdr"]:
-                meta = parse_ledger_close_meta(bytes(raw))
-                h = meta["header"]
-                for i, (env, th, proc) in enumerate(
-                    _match_processing(meta, passphrase), start=1
-                ):
-                    rows.append(
-                        _tx_row(
-                            h.ledger_seq,
-                            h.close_time,
-                            i,
-                            env,
-                            proc,
-                            th,
-                            h.ledger_version,
-                        )
-                    )
-            yield _exact_int64_frame(
-                rows, _TX_INT64_COLS
-            ) if rows else pd.DataFrame(
-                {c: [] for c in _tx_row(0, 0, 0, _EMPTY_ENV)}
+    def rows(meta: dict) -> Iterator[dict]:
+        h = meta["header"]
+        for i, (env, th, proc) in enumerate(
+            _match_processing(meta, passphrase), start=1
+        ):
+            yield _tx_row(
+                h.ledger_seq, h.close_time, i, env, proc, th, h.ledger_version
             )
 
-    return bronze.mapInPandas(gen, schema=schema)
+    return _per_ledger(
+        bronze, TRANSACTIONS_DDL + ", closed_at_unix long", rows,
+        exact_int64=_TX_INT64_COLS,
+    )
 
 
 # Go union arm names for ScVal (stellar/go xdr ArmForSwitch) — the "type"
@@ -984,130 +996,85 @@ def decode_operations(
     claim atoms from offer/path-payment results (the trades input), and the
     op's paired ledger-entry changes (the sponsor/effects/trade price scan
     input) from the apply meta."""
-    import pandas as pd
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for raw in pdf["lcm_xdr"]:
-                meta = parse_ledger_close_meta(bytes(raw))
-                h = meta["header"]
-                for ti, (env, _th, proc) in enumerate(
-                    _match_processing(meta, passphrase), start=1
-                ):
-                    tx = (
-                        env["inner"]["tx"]
-                        if env["type"] == "fee_bump"
-                        else env["tx"]
-                    )
-                    result = proc["result"]["result"] if proc else None
-                    if result is not None and result["code"] in (1, -13):
-                        result = result["inner_result"]
-                    op_results = (result or {}).get("op_results") or []
-                    op_metas = proc["meta"]["operations"] if proc else []
-                    successful = (
-                        _result_successful(proc["result"]["result"])
-                        if proc
-                        else True
-                    )
-                    for oi, op in enumerate(tx["operations"]):
-                        g, m = (
-                            _muxed(op["source"]) if op["source"] else (None, None)
-                        )
-                        soroban_extras = (
-                            _soroban_op_extras(
-                                op["type"], op["body"], tx, proc, passphrase
-                            )
-                            if op["type"] in (24, 25, 26)
-                            else {}
-                        )
-                        res = op_results[oi] if oi < len(op_results) else None
-                        atoms = []
-                        result_offer_id = None
-                        if res is not None and res.get("inner_code") == 0:
-                            succ = res.get("success") or {}
-                            atoms = [
-                                _atom_dict(a)
-                                for a in (
-                                    succ.get("offers")
-                                    or succ.get("offers_claimed")
-                                    or []
-                                )
-                            ]
-                            # the resting offer of a manage-offer success —
-                            # its id is the REAL buying_offer_id for trades
-                            # (trade.go:116-118); absent for path payments
-                            # and fully-consumed offers (→ synthetic id)
-                            if isinstance(succ, dict) and succ.get("offer"):
-                                result_offer_id = succ["offer"]["offer_id"]
-                        changes = (
-                            [
-                                op_change_struct(pc)
-                                for pc in pair_changes(op_metas[oi]["changes"])
-                            ]
-                            if oi < len(op_metas)
-                            else []
-                        )
-                        rows.append(
-                            dict(
-                                ledger_sequence=h.ledger_seq,
-                                tx_index=ti,
-                                op_index=oi,
-                                type=op["type"],
-                                source_account=g,
-                                source_muxed=m,
-                                tx_successful=successful,
-                                result_code=(
-                                    _OP_RESULT_CODE_NAMES.get(res["code"])
-                                    if res
-                                    else None
-                                ),
-                                trace_code=(
-                                    trace_code_name(
-                                        op["type"], res.get("inner_code")
-                                    )
-                                    if res and res["code"] == 0
-                                    else None
-                                ),
-                                result_offer_id=result_offer_id,
-                                body={
-                                    **_enrich_body(
-                                        _op_body(op["type"], op["body"]),
-                                        op["type"],
-                                        res,
-                                        atoms,
-                                        g or _muxed(tx["source"])[0],
-                                    ),
-                                    **soroban_extras,
-                                },
-                                claim_atoms=atoms,
-                                changes=changes,
-                            )
-                        )
-            yield pd.DataFrame(rows) if rows else pd.DataFrame(
-                columns=[
-                    "ledger_sequence", "tx_index", "op_index", "type",
-                    "source_account", "source_muxed", "tx_successful",
-                    "result_code", "trace_code", "result_offer_id", "body",
-                    "claim_atoms", "changes",
-                ]
+    def rows(meta: dict) -> Iterator[dict]:
+        h = meta["header"]
+        for ti, (env, _th, proc) in enumerate(
+            _match_processing(meta, passphrase), start=1
+        ):
+            tx = env["inner"]["tx"] if env["type"] == "fee_bump" else env["tx"]
+            result = proc["result"]["result"] if proc else None
+            if result is not None and result["code"] in (1, -13):
+                result = result["inner_result"]
+            op_results = (result or {}).get("op_results") or []
+            op_metas = proc["meta"]["operations"] if proc else []
+            successful = (
+                _result_successful(proc["result"]["result"]) if proc else True
             )
+            for oi, op in enumerate(tx["operations"]):
+                g, m = _muxed(op["source"]) if op["source"] else (None, None)
+                soroban_extras = (
+                    _soroban_op_extras(op["type"], op["body"], tx, proc, passphrase)
+                    if op["type"] in (24, 25, 26)
+                    else {}
+                )
+                res = op_results[oi] if oi < len(op_results) else None
+                atoms = []
+                result_offer_id = None
+                if res is not None and res.get("inner_code") == 0:
+                    succ = res.get("success") or {}
+                    atoms = [
+                        _atom_dict(a)
+                        for a in (
+                            succ.get("offers") or succ.get("offers_claimed") or []
+                        )
+                    ]
+                    # the resting offer of a manage-offer success — its id
+                    # is the REAL buying_offer_id for trades
+                    # (trade.go:116-118); absent for path payments and
+                    # fully-consumed offers (→ synthetic id)
+                    if isinstance(succ, dict) and succ.get("offer"):
+                        result_offer_id = succ["offer"]["offer_id"]
+                changes = (
+                    [
+                        op_change_struct(pc)
+                        for pc in pair_changes(op_metas[oi]["changes"])
+                    ]
+                    if oi < len(op_metas)
+                    else []
+                )
+                yield dict(
+                    ledger_sequence=h.ledger_seq,
+                    tx_index=ti,
+                    op_index=oi,
+                    type=op["type"],
+                    source_account=g,
+                    source_muxed=m,
+                    tx_successful=successful,
+                    result_code=(
+                        _OP_RESULT_CODE_NAMES.get(res["code"]) if res else None
+                    ),
+                    trace_code=(
+                        trace_code_name(op["type"], res.get("inner_code"))
+                        if res and res["code"] == 0
+                        else None
+                    ),
+                    result_offer_id=result_offer_id,
+                    body={
+                        **_enrich_body(
+                            _op_body(op["type"], op["body"]),
+                            op["type"],
+                            res,
+                            atoms,
+                            g or _muxed(tx["source"])[0],
+                        ),
+                        **soroban_extras,
+                    },
+                    claim_atoms=atoms,
+                    changes=changes,
+                )
 
-    return bronze.mapInPandas(gen, schema=OPERATIONS_DDL)
-
-
-_EMPTY_ENV = {
-    "type": "v1",
-    "tx": {
-        "source": {"ed25519": b"\x00" * 32, "id": None},
-        "fee": 0,
-        "seq_num": 0,
-        "preconditions": {},
-        "memo": {"type": "none"},
-        "operations": [],
-    },
-    "signatures": [],
-}
+    return _per_ledger(bronze, OPERATIONS_DDL, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -1582,74 +1549,43 @@ def decode_changes(bronze: DataFrame) -> DataFrame:
     import pandas as pd
 
     from stellar_etl_spark.schemas import CHANGES_DDL
-    from stellar_etl_spark.sources.xdr import parse_ledger_close_meta
     from stellar_etl_spark.sources.xdr_ledger import write_ledger_key
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for raw in pdf["lcm_xdr"]:
-                meta = parse_ledger_close_meta(bytes(raw))
-                h = meta["header"]
-                closed = pd.Timestamp(h.close_time, unit="s")
-                if not meta["tx_processing"] and not meta.get(
-                    "upgrades_processing"
-                ):
-                    continue
-                idx = 0
-                groups = [
-                    proc["fee_changes"]
-                    for proc in meta["tx_processing"] or []
-                ]
-                for proc in meta["tx_processing"] or []:
-                    m = proc["meta"]
-                    groups.append(m["tx_changes_before"])
-                    groups.extend(op["changes"] for op in m["operations"])
-                    groups.append(m["tx_changes_after"])
-                groups.extend(
-                    u["changes"]
-                    for u in meta.get("upgrades_processing") or []
-                )
-                for group in groups:
-                    for pc in pair_changes(group):
-                        entry = pc["post"] or pc["pre"]
-                        key = pc.get("key") or _entry_to_key(entry)
-                        wk = Writer()
-                        write_ledger_key(wk, key)
-                        rows.append(
-                            dict(
-                                ledger_sequence=h.ledger_seq,
-                                closed_at=closed,
-                                entry_type=XL.ENTRY_TYPE_NAMES[entry["type"]],
-                                change_type=pc["change_type"],
-                                change_index=idx,
-                                ledger_key=base64.b64encode(
-                                    wk.bytes()
-                                ).decode(),
-                                last_modified_ledger=entry[
-                                    "last_modified_ledger"
-                                ],
-                                sponsor=(
-                                    _acct(entry["sponsoring_id"])
-                                    if entry["sponsoring_id"]
-                                    else None
-                                ),
-                                pre=entry_struct(pc["pre"]),
-                                post=entry_struct(pc["post"]),
-                            )
-                        )
-                        idx += 1
-            yield (
-                pd.DataFrame(rows)
-                if rows
-                else pd.DataFrame(
-                    columns="ledger_sequence closed_at entry_type change_type "
-                    "change_index ledger_key last_modified_ledger sponsor "
-                    "pre post".split()
-                )
+    def rows(meta: dict) -> Iterator[dict]:
+        h = meta["header"]
+        closed = pd.Timestamp(h.close_time, unit="s")
+        processing = meta["tx_processing"] or []
+        groups = [proc["fee_changes"] for proc in processing]
+        for proc in processing:
+            m = proc["meta"]
+            groups.append(m["tx_changes_before"])
+            groups.extend(op["changes"] for op in m["operations"])
+            groups.append(m["tx_changes_after"])
+        groups.extend(u["changes"] for u in meta.get("upgrades_processing") or [])
+        pairs = (pc for group in groups for pc in pair_changes(group))
+        for idx, pc in enumerate(pairs):
+            entry = pc["post"] or pc["pre"]
+            key = pc.get("key") or _entry_to_key(entry)
+            wk = Writer()
+            write_ledger_key(wk, key)
+            yield dict(
+                ledger_sequence=h.ledger_seq,
+                closed_at=closed,
+                entry_type=XL.ENTRY_TYPE_NAMES[entry["type"]],
+                change_type=pc["change_type"],
+                change_index=idx,
+                ledger_key=base64.b64encode(wk.bytes()).decode(),
+                last_modified_ledger=entry["last_modified_ledger"],
+                sponsor=(
+                    _acct(entry["sponsoring_id"])
+                    if entry["sponsoring_id"]
+                    else None
+                ),
+                pre=entry_struct(pc["pre"]),
+                post=entry_struct(pc["post"]),
             )
 
-    return bronze.mapInPandas(gen, schema=CHANGES_DDL)
+    return _per_ledger(bronze, CHANGES_DDL, rows)
 
 
 def _atom_dict(a: dict) -> dict:
@@ -1832,8 +1768,6 @@ def decode_contract_events(
         return base64.b64encode(w.bytes()).decode()
 
     def _row(h, ti, th, successful, ev, event_type_name, in_call, op_index):
-        import pandas as pd  # noqa: F811
-
         # the XDR blob is the DIAGNOSTIC event (bool + event) — the
         # reference marshals GetDiagnosticEvents() elements
         # (contract_events.go:75), which are always diagnostic-wrapped
@@ -1865,56 +1799,31 @@ def decode_contract_events(
 
     type_names = {0: "system", 1: "contract", 2: "diagnostic"}
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for raw in pdf["lcm_xdr"]:
-                meta = parse_ledger_close_meta(bytes(raw))
-                h = meta["header"]
-                for ti, (_env2, th, proc) in enumerate(
-                    _match_processing(meta, passphrase), start=1
-                ):
-                    if proc is None:
-                        continue
-                    soroban = proc["meta"].get("soroban")
-                    if not soroban:
-                        continue
-                    ok = _result_successful(proc["result"]["result"])
-                    # stellar/go GetDiagnosticEvents(): when diagnostic
-                    # events exist they ALREADY include the contract
-                    # events — emit only those; otherwise wrap the bare
-                    # contract events as diagnostic-successful
-                    if soroban["diagnostic_events"]:
-                        diags = soroban["diagnostic_events"]
-                    else:
-                        diags = [
-                            {
-                                "in_successful_contract_call": ok,
-                                "event": ev,
-                            }
-                            for ev in soroban["events"]
-                        ]
-                    for d in diags:
-                        rows.append(
-                            _row(h, ti, th, ok, d["event"],
-                                 type_names.get(d["event"]["type"], "diagnostic"),
-                                 d["in_successful_contract_call"], 0)
-                        )
-            yield (
-                pd.DataFrame(rows)
-                if rows
-                else pd.DataFrame(
-                    columns="ledger_sequence closed_at tx_index "
-                    "transaction_hash tx_successful "
-                    "in_successful_contract_call contract_id event_type "
-                    "topics topics_decoded data data_decoded "
-                    "contract_event_xdr sac_kind sac_from sac_to "
-                    "sac_to_muxed sac_to_muxed_id sac_amount sac_asset "
-                    "sac_op_index sac_amount_clamped".split()
+    def rows(meta: dict) -> Iterator[dict]:
+        h = meta["header"]
+        for ti, (_env, th, proc) in enumerate(
+            _match_processing(meta, passphrase), start=1
+        ):
+            soroban = proc["meta"].get("soroban") if proc else None
+            if not soroban:
+                continue
+            ok = _result_successful(proc["result"]["result"])
+            # stellar/go GetDiagnosticEvents(): when diagnostic events exist
+            # they ALREADY include the contract events — emit only those;
+            # otherwise wrap the bare contract events as
+            # diagnostic-successful
+            diags = soroban["diagnostic_events"] or [
+                {"in_successful_contract_call": ok, "event": ev}
+                for ev in soroban["events"]
+            ]
+            for d in diags:
+                yield _row(
+                    h, ti, th, ok, d["event"],
+                    type_names.get(d["event"]["type"], "diagnostic"),
+                    d["in_successful_contract_call"], 0,
                 )
-            )
 
-    return bronze.mapInPandas(gen, schema=CONTRACT_EVENTS_DDL)
+    return _per_ledger(bronze, CONTRACT_EVENTS_DDL, rows)
 
 
 def decode_ledgers(bronze: DataFrame) -> DataFrame:
@@ -1932,52 +1841,37 @@ def decode_ledgers(bronze: DataFrame) -> DataFrame:
         write_ledger_header,
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "sequence", "ledger_hash", "previous_ledger_hash",
-            "ledger_header", "closed_at", "total_coins", "fee_pool",
-            "base_fee", "base_reserve", "max_tx_set_size",
-            "protocol_version", "soroban_fee_write_1kb",
-            "total_byte_size_of_bucket_list", "node_id", "signature",
-            "ledger_header_history",
-        ]
-        for pdf in batches:
-            rows = []
-            for raw in pdf["lcm_xdr"]:
-                meta = parse_ledger_close_meta(bytes(raw), tx_processing=False)
-                h = meta["header"]
-                w = Writer()
-                write_ledger_header(w, h)
-                # the full LedgerHeaderHistoryEntry (hash + header + ext) —
-                # the ledger_transactions table's tx_ledger_history blob
-                # (ledger_transaction.go:37-40)
-                we = Writer()
-                _write_header_entry(we, meta["entry_hash"], h)
-                node_id = signature = None
-                if h.close_value_signature is not None:
-                    nid, sig = h.close_value_signature
-                    node_id = encode_strkey(VERSION_ACCOUNT, nid)
-                    signature = base64.b64encode(sig).decode()
-                rows.append(
-                    (
-                        h.ledger_seq,
-                        meta["entry_hash"].hex(),
-                        h.previous_ledger_hash.hex(),
-                        base64.b64encode(w.bytes()).decode(),
-                        pd.Timestamp(h.close_time, unit="s"),
-                        h.total_coins,
-                        h.fee_pool,
-                        h.base_fee,
-                        h.base_reserve,
-                        h.max_tx_set_size,
-                        h.ledger_version,
-                        None,
-                        None,
-                        node_id,
-                        signature,
-                        base64.b64encode(we.bytes()).decode(),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def rows(meta: dict) -> list[dict]:
+        h = meta["header"]
+        w = Writer()
+        write_ledger_header(w, h)
+        # the full LedgerHeaderHistoryEntry (hash + header + ext) — the
+        # ledger_transactions table's tx_ledger_history blob
+        # (ledger_transaction.go:37-40)
+        we = Writer()
+        _write_header_entry(we, meta["entry_hash"], h)
+        node_id = signature = None
+        if h.close_value_signature is not None:
+            nid, sig = h.close_value_signature
+            node_id = encode_strkey(VERSION_ACCOUNT, nid)
+            signature = base64.b64encode(sig).decode()
+        return [dict(
+            sequence=h.ledger_seq,
+            ledger_hash=meta["entry_hash"].hex(),
+            previous_ledger_hash=h.previous_ledger_hash.hex(),
+            ledger_header=base64.b64encode(w.bytes()).decode(),
+            closed_at=pd.Timestamp(h.close_time, unit="s"),
+            total_coins=h.total_coins,
+            fee_pool=h.fee_pool,
+            base_fee=h.base_fee,
+            base_reserve=h.base_reserve,
+            max_tx_set_size=h.max_tx_set_size,
+            protocol_version=h.ledger_version,
+            soroban_fee_write_1kb=None,
+            total_byte_size_of_bucket_list=None,
+            node_id=node_id,
+            signature=signature,
+            ledger_header_history=base64.b64encode(we.bytes()).decode(),
+        )]
 
-    return bronze.mapInPandas(gen, schema=LEDGERS_DDL)
+    return _per_ledger(bronze, LEDGERS_DDL, rows, tx_processing=False)

@@ -114,7 +114,9 @@ def export_with_stats(
     *before* the success filter, so the write job itself yields the stats —
     no second pass over the data (the reference's ExportEntry +
     PrintTransformStats pairing, command_utils.go:55-103, without its
-    re-read).  ``success`` is a boolean Column or column name over ``df``.
+    re-read).  ``success`` is a boolean Column or column name over ``df``;
+    the export pipelines pass ``F.lit(True)`` (plans/pipelines._sink), so
+    ``successful`` is the row count the CLI prints.
     """
     from pyspark.sql import Observation
 

@@ -356,11 +356,6 @@ def _op_frame_cols(type_col: Column, source: Column, body: Column,
     )
 
 
-def _op_frame(lineitem: DataFrame, type_col: Column, source: Column, body: Column,
-              atoms: Column | None = None, changes: Column | None = None) -> DataFrame:
-    return lineitem.select(*_op_frame_cols(type_col, source, body, atoms, changes))
-
-
 def derived_operations_details(lineitem: DataFrame) -> DataFrame:
     """See _op_details_cols."""
     return lineitem.select(*_op_details_cols())

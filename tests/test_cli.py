@@ -25,14 +25,36 @@ def xdr_dir(tmp_path_factory):
     return str(d)
 
 
-def _run(args: list[str]) -> str:
-    env = dict(os.environ, SPARK_GRAFT_CPUS="4")
-    res = subprocess.run(
+def _cli(args: list[str], **env) -> subprocess.CompletedProcess:
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4", **env)
+    return subprocess.run(
         [sys.executable, "-m", "stellar_etl_spark", *args],
         capture_output=True, text=True, cwd=REPO, env=env, timeout=300,
     )
+
+
+def _run(args: list[str]) -> str:
+    res = _cli(args)
     assert res.returncode == 0, res.stderr[-2000:]
     return res.stdout
+
+
+def _printed_rows(stdout: str) -> int:
+    return json.loads(stdout.strip().splitlines()[-1])["rows"]
+
+
+def _rows_written(path: str) -> int:
+    """Rows in one Spark JSON or parquet output directory."""
+    import pyarrow.parquet as pq
+
+    n = 0
+    for f in glob.glob(os.path.join(path, "part-*")):
+        if f.endswith(".parquet"):
+            n += pq.ParquetFile(f).metadata.num_rows
+        else:
+            with open(f) as fh:
+                n += sum(1 for line in fh if line.strip())
+    return n
 
 
 class TestCli:
@@ -119,3 +141,62 @@ class TestCli:
         b, s = rows(batch_out), rows(stream_out)
         assert len(b) > 0
         assert b == s
+
+
+class TestCliWriteJob:
+    """A table export is one write job: the printed row count is observed
+    inside it (no post-write count), and silver reads the raw file bytes
+    (no bronze header pass)."""
+
+    def test_export_transactions_runs_two_jobs(self, xdr_dir, tmp_path):
+        """The ledgers broadcast and the write — counted in Spark's event
+        log of the CLI process."""
+        logs = tmp_path / "eventlog"
+        logs.mkdir()
+        res = _cli(
+            ["export_transactions", "--ledgers-dir", xdr_dir,
+             "--output", str(tmp_path / "out")],
+            PYSPARK_SUBMIT_ARGS=(
+                "--conf spark.eventLog.enabled=true "
+                "--conf spark.eventLog.rolling.enabled=false "
+                "--conf spark.eventLog.compress=false "
+                f"--conf spark.eventLog.dir=file://{logs} pyspark-shell"
+            ),
+        )
+        assert res.returncode == 0, res.stderr[-2000:]
+        (log,) = glob.glob(str(logs / "*"))
+        with open(log) as fh:
+            events = [json.loads(line)["Event"] for line in fh]
+        assert events.count("SparkListenerJobStart") == 2
+
+    @pytest.mark.parametrize("flag, dirs", [
+        (None, ["transactions.jsonl"]),
+        ("--parquet", ["transactions.parquet"]),
+        ("--both", ["transactions.jsonl", "transactions.parquet"]),
+    ])
+    def test_printed_rows_equal_rows_written(self, xdr_dir, tmp_path,
+                                             flag, dirs):
+        out = _run(
+            ["export_transactions", "--ledgers-dir", xdr_dir,
+             "--output", str(tmp_path)] + ([flag] if flag else [])
+        )
+        # 6 ledgers x 5 transactions
+        assert _printed_rows(out) == 30
+        for d in dirs:
+            assert _rows_written(str(tmp_path / d)) == 30
+
+    def test_truncated_envelope_fails_loudly(self, xdr_dir, tmp_path):
+        """The CLI decodes no bronze header first, so the silver decode
+        itself must reject a ledger cut short inside its envelopes (the
+        last 40 bytes sit in the final envelope's signature)."""
+        import shutil
+
+        d = tmp_path / "ledgers"
+        shutil.copytree(xdr_dir, d)
+        victim = d / "4.xdr"
+        victim.write_bytes(victim.read_bytes()[:-40])
+        res = _cli(["export_transactions", "--ledgers-dir", str(d),
+                    "--output", str(tmp_path / "out")])
+        assert res.returncode != 0
+        assert not glob.glob(str(tmp_path / "out" / "transactions.jsonl"
+                                 / "part-*"))

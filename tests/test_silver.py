@@ -131,6 +131,37 @@ class TestDecodeLedgers:
         assert out[3].operation_count == 1  # fee-bump inner payment
 
 
+class TestTransactionlessLedgers:
+    def test_every_decoder_over_ledgers_without_transactions(
+        self, spark, tmp_path
+    ):
+        """A decode partition holding only ledgers without transactions
+        yields no rows and no error from every silver table, fed the raw
+        file bytes as the CLI feeds them (ledgers: one header row each)."""
+        from stellar_etl_spark.sources import silver
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+
+        for seq in (2, 3, 4, 5):
+            h = LedgerHeader(
+                ledger_version=20, close_time=1_704_067_200 + 5 * seq,
+                ledger_seq=seq, total_coins=10**12,
+            )
+            raw = (
+                encode_ledger_close_meta_v0(h, [], tx_processing=[])
+                if seq % 2
+                else encode_ledger_close_meta_v1(h, [[]], tx_processing=[])
+            )
+            (tmp_path / f"{seq}.xdr").write_bytes(raw)
+        files = read_ledger_files(spark, str(tmp_path)).select(
+            F.col("content").alias("lcm_xdr")
+        )
+        for table in ("transactions", "operations", "changes",
+                      "contract_events"):
+            assert getattr(silver, f"decode_{table}")(files).collect() == []
+        ledgers = silver.decode_ledgers(files).collect()
+        assert sorted(r.sequence for r in ledgers) == [2, 3, 4, 5]
+
+
 class TestSilverDecode:
     def test_transactions_from_wire_bytes(self, bronze):
         rows = {

@@ -1257,6 +1257,31 @@ class TestLedgerDataSource:
         replay = list(r.readBetweenOffsets({"last_seq": 1}, {"last_seq": 3}))
         assert [row[0] for row in replay] == [2, 3]
 
+    def test_real_lcm_sequence_from_file_name(self, spark, tmp_path):
+        """A real LedgerCloseMeta starts with its union version (0 or 1),
+        not its sequence: the source takes the sequence from the file
+        name it planned the read by."""
+        from stellar_etl_spark.sources.datasource import LedgerDataSource
+        from stellar_etl_spark.sources.xdr import (
+            LedgerHeader,
+            encode_ledger_close_meta_v1,
+        )
+
+        src = tmp_path / "store"
+        src.mkdir()
+        h = LedgerHeader(
+            ledger_version=21, close_time=1_704_067_200, ledger_seq=1234,
+            total_coins=10**12,
+        )
+        raw = encode_ledger_close_meta_v1(h, [[]])
+        (src / "00001234.xdr").write_bytes(raw)
+        spark.dataSource.register(LedgerDataSource)
+        rows = (
+            spark.read.format("stellar_ledgers").option("path", str(src))
+            .load().collect()
+        )
+        assert [(r.sequence, r.lcm_xdr) for r in rows] == [(1234, raw)]
+
     def test_streaming_end_to_end(self, spark, tmp_path):
         from stellar_etl_spark.sources.datasource import LedgerDataSource
 

@@ -7,9 +7,12 @@ parity bar is >= 64 ledgers per 5 minutes of wall clock per core.
 
 This tool builds N synthetic ledgers (V0/V1 mix, multi-op envelopes) with
 the repo's own RFC 4506 encoder, writes them as one-file-per-ledger bronze
-(the reference's datastore layout), then times the real silver path —
-binaryFile scan -> mapInPandas pure-Python XDR decode -> transaction /
-operation rows — end to end on local[$SPARK_GRAFT_CPUS].
+(the reference's datastore layout), then times the silver path the CLI
+exports run — binaryFile scan -> raw file bytes -> mapInPandas pure-Python
+XDR decode -> transaction / operation rows — end to end on
+local[$SPARK_GRAFT_CPUS].  No bronze header decode runs first, so the
+figures are not comparable with ones taken through
+``sources.bronze.decode_ledger_files``.
 
 Usage: python tools/bench_decode.py [n_ledgers]
 
@@ -96,11 +99,10 @@ def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4096
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+    from pyspark.sql import functions as F
+
     from stellar_etl_spark.session import get_spark
-    from stellar_etl_spark.sources.bronze import (
-        decode_ledger_files,
-        read_ledger_files,
-    )
+    from stellar_etl_spark.sources.bronze import read_ledger_files
     from stellar_etl_spark.sources.silver import (
         decode_operations,
         decode_transactions,
@@ -115,17 +117,20 @@ def main() -> None:
         spark = get_spark("bench-decode", cpus=cpus)
         spark.sparkContext.setLogLevel("ERROR")
 
-        bronze = decode_ledger_files(read_ledger_files(spark, tmp))
+        # the raw file bytes, as the CLI exports feed them to silver
+        raw = read_ledger_files(spark, tmp).select(
+            F.col("content").alias("lcm_xdr")
+        )
         # warm-up: JVM + Arrow + python worker pool
-        decode_transactions(bronze.limit(8)).write.format("noop").mode(
+        decode_transactions(raw.limit(8)).write.format("noop").mode(
             "overwrite"
         ).save()
 
         t0 = time.time()
-        decode_transactions(bronze).write.format("noop").mode("overwrite").save()
+        decode_transactions(raw).write.format("noop").mode("overwrite").save()
         t_tx = time.time() - t0
         t0 = time.time()
-        decode_operations(bronze).write.format("noop").mode("overwrite").save()
+        decode_operations(raw).write.format("noop").mode("overwrite").save()
         t_op = time.time() - t0
 
         ledgers_per_sec = round(n / t_tx, 1)
