@@ -3,6 +3,9 @@ stable schema, and has a same-named oracle (or is a documented weak check)."""
 
 from __future__ import annotations
 
+import hashlib
+import pathlib
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -16,6 +19,41 @@ WEAK_OK: set[str] = set()
 def test_registry_oracle_alignment():
     assert set(ORACLES) - set(QUERIES) == set()
     assert set(QUERIES) - set(ORACLES) == WEAK_OK
+
+
+# One sha256 per ORACLES key ("<hex>  <key>" lines).  After an intended
+# oracle change, regenerate from the repo root with:
+#   python -c "from tests.test_entry_contract import oracle_digests as d; print(*(f'{h}  {k}' for k, h in sorted(d().items())), sep=chr(10))" > tests/oracle_sql.sha256
+_ORACLE_PINS = pathlib.Path(__file__).with_name("oracle_sql.sha256")
+
+
+def oracle_digests() -> dict[str, str]:
+    """sha256 of each oracle's SQL without its whole-line ``--`` comments:
+    comment text may move (e.g. to a Python comment on a shared fragment);
+    every other byte of the statement is pinned."""
+    return {
+        k: hashlib.sha256("".join(
+            line for line in sql.splitlines(keepends=True)
+            if not line.lstrip().startswith("--")
+        ).encode()).hexdigest()
+        for k, sql in ORACLES.items()
+    }
+
+
+def test_oracle_sql_pinned():
+    """Refactors of the oracle module (shared fragments, moved comments)
+    must leave every statement the DuckDB side executes unchanged."""
+    pinned = {
+        k: h for h, k in (
+            line.split() for line in _ORACLE_PINS.read_text().splitlines()
+        )
+    }
+    current = oracle_digests()
+    changed = sorted(
+        k for k in pinned.keys() | current.keys()
+        if pinned.get(k) != current.get(k)
+    )
+    assert changed == [], f"oracle SQL text changed for: {changed}"
 
 
 def test_entry_flagship(spark):
