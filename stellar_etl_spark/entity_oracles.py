@@ -19,6 +19,22 @@ _ASSET_TYPE = (
 _ASSET_CODE = "CASE {x} % 3 WHEN 1 THEN 'USD' WHEN 2 THEN 'LONGCODE' END"
 _ASSET_ISSUER = "CASE {x} % 3 WHEN 1 THEN 'ISS1' WHEN 2 THEN 'ISS2' END"
 
+# Change-row contract (derive.py, the two ledger-entry change streams):
+# every state-entity row ends with its ledger position, the entry key, the
+# sponsor of every 6th entry and the removed flag (change type 2).  Classic
+# entries key as 'LK' || eid; Soroban entries as base64('SLK' || eid), a
+# valid-base64 key whose decoded bytes the ledger_key_hash columns hash.
+_CHANGE_COLS = """  seq AS ledger_sequence,
+  1704067200 + seq * 5 AS closed_at_unix,
+  seq AS last_modified_ledger,
+  {key} AS ledger_entry_key,
+  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
+  (ct = 2) AS deleted"""
+_CLASSIC_CHANGE_COLS = _CHANGE_COLS.format(key="'LK' || CAST(eid AS VARCHAR)")
+_SOROBAN_CHANGE_COLS = _CHANGE_COLS.format(
+    key="to_base64(encode('SLK' || CAST(eid AS VARCHAR)))"
+)
+
 ENTITY_ORACLES: dict[str, str] = {
     # ------------------------------------------------------------------
     "tx_projection": """
@@ -335,7 +351,7 @@ SELECT CAST(op_id AS VARCHAR) || '-' || CAST(idx AS VARCHAR) AS id,
 FROM eff
 """,
     # ------------------------------------------------------------------
-    "changes_accounts": """
+    "changes_accounts": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -357,16 +373,11 @@ SELECT
   CAST(3 AS BIGINT) AS threshold_high,
   CAST(eid % 1000 AS DOUBLE) / 10000000.0 AS buying_liabilities,
   CAST(eid % 500 AS DOUBLE) / 10000000.0 AS selling_liabilities,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  'LK' || CAST(eid AS VARCHAR) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_CLASSIC_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
-    "changes_trustlines": """
+    "changes_trustlines": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -389,16 +400,11 @@ SELECT
   eid % 16 AS flags,
   CAST(eid % 1000 AS DOUBLE) / 10000000.0 AS buying_liabilities,
   CAST(eid % 500 AS DOUBLE) / 10000000.0 AS selling_liabilities,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  'LK' || CAST(eid AS VARCHAR) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_CLASSIC_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
-    "changes_offers": """
+    "changes_offers": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -417,16 +423,11 @@ SELECT
   eid % 7 + 1 AS priced,
   CAST(eid % 9 + 1 AS DOUBLE) / CAST(eid % 7 + 1 AS DOUBLE) AS price,
   eid % 16 AS flags,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  'LK' || CAST(eid AS VARCHAR) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_CLASSIC_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
-    "changes_pools": """
+    "changes_pools": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -444,12 +445,7 @@ SELECT
   CAST((eid % 10000000) + b AS DOUBLE) / 10000000.0 AS asset_a_amount,
   'native' AS asset_b_type,
   CAST(eid % 1000000 AS DOUBLE) / 10000000.0 AS asset_b_amount,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  'LK' || CAST(eid AS VARCHAR) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_CLASSIC_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
@@ -588,7 +584,7 @@ SELECT * FROM op_events UNION ALL SELECT * FROM fee_events
 
 SOROBAN_ORACLES: dict[str, str] = {
     # ------------------------------------------------------------------
-    "changes_claimable_balances": """
+    "changes_claimable_balances": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -609,12 +605,7 @@ SELECT
   CASE uid % 3 WHEN 1 THEN 'ISS1' WHEN 2 THEN 'ISS2' END AS asset_issuer,
   CAST((eid % 1000000000) + b AS DOUBLE) / 10000000.0 AS asset_amount,
   eid % 2 AS flags,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_SOROBAN_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
@@ -625,7 +616,7 @@ FROM e
     # the verified-vs-forged OUTCOME per row (DuckDB 1.0 sha256 is
     # varchar-only — it cannot hash the NUL-bearing binary preimage).  The
     # i128 balance is assembled in HUGEINT (contract_data.go:366-378).
-    "changes_contract_data": """
+    "changes_contract_data": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct, event_id % 4 AS sub,
@@ -655,21 +646,16 @@ SELECT
     CAST(amt_hi AS HUGEINT) * 18446744073709551616 + amt_lo AS VARCHAR)
   END AS balance,
   'S0V5' || CAST(eid AS VARCHAR) AS key,
-  '{"key":' || CAST(eid AS VARCHAR) || '}' AS key_decoded,
+  '{{"key":' || CAST(eid AS VARCHAR) || '}}' AS key_decoded,
   'VkFM' || CAST(eid AS VARCHAR) AS val,
-  '{"val":' || CAST(eid AS VARCHAR) || '}' AS val_decoded,
+  '{{"val":' || CAST(eid AS VARCHAR) || '}}' AS val_decoded,
   'Q0RY' || CAST(eid AS VARCHAR) AS contract_data_xdr,
   sha256('SLK' || CAST(eid AS VARCHAR)) AS ledger_key_hash,
   to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_key_hash_base_64,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_SOROBAN_CHANGE_COLS}
 FROM v
 """,
-    "changes_contract_code": """
+    "changes_contract_code": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -693,16 +679,11 @@ SELECT
   CASE WHEN v1 THEN eid % 4096 END AS n_data_segment_bytes,
   sha256('SLK' || CAST(eid AS VARCHAR)) AS ledger_key_hash,
   to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_key_hash_base_64,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_SOROBAN_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
-    "changes_config_settings": """
+    "changes_config_settings": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct, event_id % 3 AS arm,
@@ -719,20 +700,15 @@ SELECT
   CAST(0 AS BIGINT) AS ledger_max_tx_count,
   CASE WHEN arm = 2 THEN CAST(eid % 1000 AS VARCHAR) || ',' || CAST(eid % 1000 + 1 AS VARCHAR)
     ELSE '' END AS bucket_window_list,
-  CASE WHEN arm = 1 THEN '{"const":' || CAST(eid % 100 AS VARCHAR) || ',"linear":7},'
-    || '{"const":' || CAST(eid % 50 AS VARCHAR) || ',"linear":9}'
+  CASE WHEN arm = 1 THEN '{{"const":' || CAST(eid % 100 AS VARCHAR) || ',"linear":7}},'
+    || '{{"const":' || CAST(eid % 50 AS VARCHAR) || ',"linear":9}}'
     ELSE '' END AS cpu_cost_params_list,
   '' AS mem_cost_params_list,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_SOROBAN_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------
-    "changes_ttl": """
+    "changes_ttl": f"""
 WITH e AS (
   SELECT event_id AS eid, user_id AS uid,
     event_id // 500 + 2 AS seq, event_id % 3 AS ct,
@@ -742,12 +718,7 @@ WITH e AS (
 SELECT
   md5('TTL' || CAST(eid AS VARCHAR)) AS key_hash,
   seq + eid % 10000 + b AS live_until_ledger_seq,
-  seq AS ledger_sequence,
-  1704067200 + seq * 5 AS closed_at_unix,
-  seq AS last_modified_ledger,
-  to_base64(encode('SLK' || CAST(eid AS VARCHAR))) AS ledger_entry_key,
-  CASE WHEN eid % 6 = 0 THEN 'SP' || CAST(uid AS VARCHAR) END AS sponsor,
-  (ct = 2) AS deleted
+{_SOROBAN_CHANGE_COLS}
 FROM e
 """,
     # ------------------------------------------------------------------

@@ -5,6 +5,14 @@ Each statement reproduces the Spark query's exact arithmetic recipe
 left-fold float accumulation) so the driver's value-hash compare matches
 bit-for-bit.  Tables are pre-registered views: region nation customer
 supplier part orders lineitem events documents embeddings.
+
+Fragment rule: a contract that more than one oracle must agree on (one
+algorithm or policy, e.g. the valid-vector filter or the MinHash
+signature) has exactly one definition, a module-level SQL fragment below
+that the statements interpolate.  Fragments are hand-written DuckDB SQL
+and are never derived from the Spark code, so each oracle stays an
+independent implementation of its query.  The contract's explanation
+lives once, as the Python comment on its fragment.
 """
 
 _DISC_PRICE = (
@@ -22,6 +30,56 @@ def fixed_ln_micro_sql(a: str, b: str, scale: int = 1_000_000) -> str:
     from stellar_etl_spark.operators.util import fixed_ln_sql
 
     return fixed_ln_sql(a, b, scale, dialect="duckdb")
+
+
+# Valid-vector contract (queries.emb_table): similarity, clustering and
+# quantization take only non-NULL vectors of the corpus dimension with a
+# nonzero element.  Oracles over embeddings open with this shadowing CTE
+# and read ``emb_valid`` instead of ``embeddings``.
+_EMB_VALID = """emb_valid AS (
+  SELECT * FROM embeddings
+  WHERE embedding IS NOT NULL
+    AND len(embedding) = 64
+    AND len(list_filter(embedding, x -> x <> 0)) > 0
+)"""
+
+# Shingle -> MinHash -> LSH contract (operators.dedup shingles,
+# minhash_signature, minhash_lsh_candidates).  Shingles: the distinct
+# 3-word n-grams of ``words`` (empty below 3 words).  Signature of
+# ``shingle_set``: 8 affine permutations (2p+1)*h + 98765p + 12345 mod
+# 2^31-1 over one base hash per shingle, h = the first 15 hex digits of
+# md5(s) mod 2^31-1.  LSH: 4 bands ``b`` of 2 signature rows, keyed by the
+# md5 of the band id and its two values.
+_SHINGLE_SET = """CASE WHEN len(words) >= 3
+      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
+                          FOR i IN generate_series(1, len(words) - 2)])
+      ELSE [] END"""
+_MINHASH_SIG = """[list_min([
+       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
+        + 98765*p + 12345) % 2147483647
+       FOR s IN shingle_set])
+     FOR p IN generate_series(0, 7)]"""
+_LSH_BANDS = "(SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)"
+_LSH_BAND_KEY = "md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2]))"
+
+# Sessionization contract (operators.sessionize): per user, in (ts_us,
+# event_id) order, an event more than 30 minutes (1,800,000,000 us) after
+# the previous one opens a new session; ``session_idx`` counts a user's
+# sessions from 1.  Reads CTE ``e`` (user_id, event_id, ts_us = epoch_us of
+# the event time) and defines ``gaps`` and ``sess``.
+_SESSIONS = """gaps AS (
+  SELECT user_id, event_id, ts_us,
+    CASE WHEN lag(ts_us) OVER w IS NULL
+           OR ts_us - lag(ts_us) OVER w > 1800000000
+         THEN 1 ELSE 0 END AS new_sess
+  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
+),
+sess AS (
+  SELECT user_id, ts_us,
+    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+                        ROWS UNBOUNDED PRECEDING) AS session_idx
+  FROM gaps
+)"""
 
 
 ORACLES: dict[str, str] = {
@@ -240,14 +298,11 @@ SELECT doc_id,
   CAST(best AS BIGINT) AS lang_score
 FROM b
 """,
-    "doc_fingerprint": """
+    "doc_fingerprint": f"""
 WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents),
 s AS (
   SELECT doc_id, text,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS sh
+    {_SHINGLE_SET} AS sh
   FROM w
 )
 SELECT doc_id, md5(text) AS content_md5,
@@ -258,29 +313,22 @@ FROM s
 SELECT md5(text) AS content_md5, MIN(doc_id) AS doc_id, COUNT(*) AS dup_count
 FROM documents GROUP BY md5(text)
 """,
-    "minhash_near_dup": """
+    "minhash_near_dup": f"""
 WITH docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
@@ -296,14 +344,11 @@ JOIN sh b ON b.doc_id = id_b
 WHERE CAST(len(list_intersect(a.shingle_set, b.shingle_set)) AS DOUBLE)
     / CAST(len(list_distinct(list_concat(a.shingle_set, b.shingle_set))) AS DOUBLE) >= 0.5
 """,
-    "ngram_jaccard_near_dup": """
+    "ngram_jaccard_near_dup": f"""
 WITH docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sized AS (SELECT doc_id, shingle_set FROM sh WHERE len(shingle_set) > 0),
@@ -403,14 +448,7 @@ SELECT doc_id, ROUND(score, 6) AS bm25
 FROM scored ORDER BY bm25 DESC, doc_id LIMIT 20
 """,
     "hybrid_rrf_search": f"""
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), tok AS (
+WITH {_EMB_VALID}, tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
 ),
 dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
@@ -639,24 +677,12 @@ SELECT '2_click_after_view', COUNT(*) FROM c
 UNION ALL
 SELECT '3_purchase_after_click', COUNT(*) FROM p
 """,
-    "errors_in_sessions": """
+    "errors_in_sessions": f"""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
   WHERE event_type <> 'error'
 ),
-gaps AS (
-  SELECT user_id, event_id, ts_us,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS new_sess
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sess AS (
-  SELECT user_id, ts_us,
-    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM gaps
-),
+{_SESSIONS},
 s AS (
   SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
     MIN(ts_us) AS session_start_us, MAX(ts_us) AS session_end_us
@@ -672,23 +698,11 @@ FROM s LEFT JOIN err
  AND err.ts_us >= s.session_start_us AND err.ts_us <= s.session_end_us
 GROUP BY s.user_id, s.session_idx, s.session_start_us, s.session_end_us
 """,
-    "active_sessions_per_window": """
+    "active_sessions_per_window": f"""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
 ),
-gaps AS (
-  SELECT user_id, event_id, ts_us,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS new_sess
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sess AS (
-  SELECT user_id, ts_us,
-    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM gaps
-),
+{_SESSIONS},
 s AS (
   SELECT user_id, session_idx,
     MIN(ts_us) AS a, MAX(ts_us) AS b
@@ -814,15 +828,8 @@ SELECT doc_id,
   CAST(SUM(CASE WHEN tally > 0 THEN (CAST(1 AS BIGINT) << bit) ELSE 0 END) AS BIGINT) AS simhash
 FROM votes GROUP BY doc_id
 """,
-    "knn_cosine_bruteforce": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+    "knn_cosine_bruteforce": f"""
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 q AS (SELECT vec_id AS query_id, v AS qv FROM base WHERE vec_id IN (0, 1, 2, 3, 4)),
@@ -842,15 +849,8 @@ ranked AS (
 )
 SELECT query_id, rnk, nbr_id, cosine_sim FROM ranked WHERE rnk <= 5
 """,
-    "embedding_label_centroids": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-)
+    "embedding_label_centroids": f"""
+WITH {_EMB_VALID}
 SELECT label, CAST(i - 1 AS BIGINT) AS dim,
   ROUND(AVG(CAST(embedding[i] AS DOUBLE)), 6) AS centroid_val
 FROM emb_valid, (SELECT unnest(generate_series(1, 64)) AS i) AS dims(i)
@@ -1127,15 +1127,8 @@ SELECT doc_id,
   ) END AS BIGINT) AS rolling_hash
 FROM documents
 """,
-    "embedding_near_dup": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+    "embedding_near_dup": f"""
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, label, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -1153,15 +1146,8 @@ WHERE ROUND(
 """,
     # IVF probe selection is deterministic (exact per-label centroids, ties
     # broken by cell id), so the "approximate" path still has an exact twin.
-    "ivf_knn_approx": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+    "ivf_knn_approx": f"""
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, label, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 cent AS (
@@ -1226,29 +1212,22 @@ GROUP BY a.wk
     # connected components via recursive transitive closure — min reachable
     # node id per node equals the iterative min-label fixpoint on the Spark
     # side.
-    "near_dup_clusters": """
+    "near_dup_clusters": f"""
 WITH RECURSIVE docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
@@ -1273,23 +1252,11 @@ reach(node, label) AS (
 )
 SELECT node AS doc_id, MIN(label) AS cluster_id FROM reach GROUP BY node
 """,
-    "sessionize_events": """
+    "sessionize_events": f"""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
 ),
-gaps AS (
-  SELECT user_id, event_id, ts_us,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS new_sess
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sess AS (
-  SELECT user_id, ts_us,
-    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM gaps
-)
+{_SESSIONS}
 SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
   MIN(ts_us) AS session_start_us,
   MAX(ts_us) AS session_end_us,
@@ -1350,15 +1317,8 @@ FROM documents
 WHERE (('0x' || substring(md5(text), 1, 8))::BIGINT % 1000)
   < (CASE WHEN source IN ('src0', 'src1', 'src2', 'src3') THEN 500 ELSE 50 END)
 """,
-    "embedding_quantization": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+    "embedding_quantization": f"""
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 s AS (
@@ -1640,15 +1600,12 @@ SELECT doc_id, n_tokens, top_unigram_frac, top_bigram_frac,
   (top_unigram_frac > 0.2 OR top_bigram_frac > 0.2) AS repetitive
 FROM fr
 """,
-    "ngram_contamination": """
+    "ngram_contamination": f"""
 WITH w AS (SELECT doc_id, source, string_split(text, ' ') AS words
            FROM documents),
 g AS (
   SELECT doc_id, source,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS grams
+    {_SHINGLE_SET} AS grams
   FROM w
 ),
 bench AS (
@@ -1741,15 +1698,8 @@ r3 AS (
 SELECT node, ROUND(r, 6) AS rank FROM r3
 ORDER BY ROUND(r, 6) DESC, node LIMIT 500
 """,
-    "kmeans_clusters": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), pts AS (
+    "kmeans_clusters": f"""
+WITH {_EMB_VALID}, pts AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id,
     list_transform(embedding,
       x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
@@ -1838,15 +1788,8 @@ SELECT lang, source, COUNT(*) AS n_docs,
        AS DOUBLE) / 1000000.0 AS bytes_per_token
 FROM per_doc GROUP BY lang, source
 """,
-    "semantic_dedup": """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), pts AS (
+    "semantic_dedup": f"""
+WITH {_EMB_VALID}, pts AS (
   SELECT CAST(vec_id AS BIGINT) AS vec_id,
     list_transform(embedding,
       x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
@@ -2011,23 +1954,11 @@ SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars,
   CAST(n_chars AS DOUBLE) / CAST(hv AS DOUBLE) AS priority
 FROM h ORDER BY priority DESC, doc_id LIMIT 200
 """,
-    "sessionize_skew_safe": """
+    "sessionize_skew_safe": f"""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events
 ),
-gaps AS (
-  SELECT user_id, event_id, ts_us,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS new_sess
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sess AS (
-  SELECT user_id, ts_us,
-    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM gaps
-)
+{_SESSIONS}
 SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
   MIN(ts_us) AS session_start_us,
   MAX(ts_us) AS session_end_us,
@@ -2075,29 +2006,22 @@ SELECT o_orderpriority, 'total_price', total_price FROM w
 UNION ALL
 SELECT o_orderpriority, 'max_price', max_price FROM w
 """,
-    "near_dup_editdist": """
+    "near_dup_editdist": f"""
 WITH docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
@@ -2239,15 +2163,8 @@ SELECT doc_id,
 FROM d
 """
 
-ORACLES["pq_ann_search"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), pts AS (
+ORACLES["pq_ann_search"] = f"""
+WITH {_EMB_VALID}, pts AS (
   SELECT CAST(vec_id AS BIGINT) AS vid,
     list_transform(embedding,
       x -> CAST(round(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS q
@@ -2358,29 +2275,22 @@ FROM (SELECT * FROM row1 UNION ALL SELECT * FROM row2
 """
 )
 
-ORACLES["incremental_dedup"] = """
+ORACLES["incremental_dedup"] = f"""
 WITH docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id, (doc_id % 7 = 3) AS is_new,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, is_new, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, is_new, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT n.doc_id AS nid, i.doc_id AS iid
@@ -2571,29 +2481,22 @@ SELECT source, doc_id, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
 FROM c WHERE cum_tokens <= 600
 """
 
-ORACLES["cluster_keep_best"] = """
+ORACLES["cluster_keep_best"] = f"""
 WITH RECURSIVE docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
@@ -2631,15 +2534,8 @@ SELECT cluster_id, survivor_doc_id, survivor_chars, cluster_size FROM (
 ) WHERE rn = 1
 """
 
-ORACLES["pca_power_iteration"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+ORACLES["pca_power_iteration"] = f"""
+WITH {_EMB_VALID}, base AS (
   SELECT [CAST(round(CAST(x AS DOUBLE) * 100) AS BIGINT) FOR x IN embedding] AS q
   FROM emb_valid WHERE len(embedding) = 64
 ),
@@ -2672,29 +2568,22 @@ SELECT CAST(idx[k] AS INT) AS i, round(vals[k] / nrm, 6) AS loading
 FROM n, LATERAL unnest(generate_series(1, 64)) AS t(k)
 """
 
-ORACLES["source_contamination"] = """
+ORACLES["source_contamination"] = f"""
 WITH docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
@@ -2778,15 +2667,8 @@ SELECT source, status, CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM j GROUP BY source, status
 """
 
-ORACLES["label_balanced_sample"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), counts AS (SELECT label, COUNT(*) AS n FROM emb_valid GROUP BY label),
+ORACLES["label_balanced_sample"] = f"""
+WITH {_EMB_VALID}, counts AS (SELECT label, COUNT(*) AS n FROM emb_valid GROUP BY label),
 m AS (SELECT MIN(n) AS m FROM counts),
 ranked AS (
   SELECT label, vec_id,
@@ -2825,14 +2707,11 @@ e AS (
 SELECT doc_id, n_chars, entropy, entropy < 2.5 AS low_entropy FROM e
 """
 
-ORACLES["ngram_novelty_score"] = """
+ORACLES["ngram_novelty_score"] = f"""
 WITH w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 g AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS grams
+    {_SHINGLE_SET} AS grams
   FROM w
 ),
 ex AS (SELECT doc_id, unnest(grams) AS gram FROM g),
@@ -2924,15 +2803,8 @@ SELECT doc_id, difficulty, stage,
 FROM staged
 """
 
-ORACLES["embedding_truncation_audit"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+ORACLES["embedding_truncation_audit"] = f"""
+WITH {_EMB_VALID}, base AS (
   SELECT label, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 e AS (
@@ -2955,15 +2827,8 @@ SELECT k, label, n_vecs,
 FROM agg
 """
 
-ORACLES["ann_recall_audit"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+ORACLES["ann_recall_audit"] = f"""
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, label, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 q AS (
@@ -3098,15 +2963,8 @@ SELECT doc_id, n_bigrams,
 FROM agg
 """
 
-ORACLES["hard_negatives"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+ORACLES["hard_negatives"] = f"""
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, label, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 a AS (
@@ -3383,23 +3241,11 @@ SELECT doc_id,
 FROM sel
 """
 
-ORACLES["session_error_overlap"] = """
+ORACLES["session_error_overlap"] = f"""
 WITH e AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
 ),
-gaps AS (
-  SELECT user_id, event_id, ts_us,
-    CASE WHEN lag(ts_us) OVER w IS NULL
-           OR ts_us - lag(ts_us) OVER w > 1800000000
-         THEN 1 ELSE 0 END AS new_sess
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-),
-sess AS (
-  SELECT user_id, ts_us,
-    SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-                        ROWS UNBOUNDED PRECEDING) AS session_idx
-  FROM gaps
-),
+{_SESSIONS},
 agg AS (
   SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
     MIN(ts_us) AS session_start_us,
@@ -4437,15 +4283,8 @@ SELECT o_orderpriority, n_orders, total_lines,
 FROM s
 """
 
-ORACLES["embedding_drift_by_label"] = """
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+ORACLES["embedding_drift_by_label"] = f"""
+WITH {_EMB_VALID}, base AS (
   SELECT label, vec_id % 2 AS half,
     [CAST(x AS DOUBLE) FOR x IN embedding] AS v
   FROM emb_valid
@@ -4603,14 +4442,7 @@ _KC_D2 = (
 )
 
 ORACLES["kcenter_coreset"] = f"""
--- valid-vector contract (shadowing CTE): NULL / all-zero vectors are
--- outside every similarity/clustering/quantization operator's domain
-WITH emb_valid AS (
-  SELECT * FROM embeddings
-  WHERE embedding IS NOT NULL
-    AND len(embedding) = 64
-    AND len(list_filter(embedding, x -> x <> 0)) > 0
-), base AS (
+WITH {_EMB_VALID}, base AS (
   SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS v FROM emb_valid
 ),
 c1 AS (SELECT vec_id AS center_id, v AS cv FROM base ORDER BY vec_id LIMIT 1),
@@ -4755,29 +4587,22 @@ SELECT s.n_rows, s.n_cells, s.chi2_scaled,
 FROM s, dims
 """
 
-ORACLES["minhash_calibration_curve"] = """
+ORACLES["minhash_calibration_curve"] = f"""
 WITH docs AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
 sh AS (
   SELECT doc_id,
-    CASE WHEN len(words) >= 3
-      THEN list_distinct([words[i] || ' ' || words[i+1] || ' ' || words[i+2]
-                          FOR i IN generate_series(1, len(words) - 2)])
-      ELSE [] END AS shingle_set
+    {_SHINGLE_SET} AS shingle_set
   FROM docs
 ),
 sig AS (
   SELECT doc_id, shingle_set,
-    [list_min([
-       ((2*p + 1) * (('0x' || substring(md5(s), 1, 15))::BIGINT % 2147483647)
-        + 98765*p + 12345) % 2147483647
-       FOR s IN shingle_set])
-     FOR p IN generate_series(0, 7)] AS ms
+    {_MINHASH_SIG} AS ms
   FROM sh WHERE len(shingle_set) > 0
 ),
 banded AS (
   SELECT doc_id, b AS band_id,
-    md5(concat_ws('|', b, ms[2*b + 1], ms[2*b + 2])) AS band_key
-  FROM sig, (SELECT unnest(generate_series(0, 3)) AS b) AS bands(b)
+    {_LSH_BAND_KEY} AS band_key
+  FROM sig, {_LSH_BANDS}
 ),
 cand AS (
   SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
