@@ -7,10 +7,11 @@ decode in ``mapInPandas`` → partitioned bronze parquet.  The reference's
 prefetch workers / ring buffer (utils/main.go:239-240) are replaced by Spark
 task parallelism; its retry loop by task retries.
 
-The real LedgerCloseMeta XDR decode needs the stellar SDK, which is not in
-this container — the decode step is therefore pluggable: pass any callable
-``bytes -> dict``; ``fake_lcm_decoder`` is the deterministic stand-in used by
-tests (plumbing — schema, batching, partitioning — is real and tested).
+The decode step is pluggable: any callable ``bytes -> dict``.  The default,
+``real_lcm_decoder``, is the pure-Python LedgerCloseMeta XDR parser
+(sources/xdr.py).  ``fake_lcm_decoder`` is a deterministic stand-in that
+derives header fields from the raw bytes; tests use it for plumbing, and
+the ``stellar_ledgers`` DataSource still fills its header columns from it.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from stellar_etl_spark.sources.xdr import real_lcm_decoder
 
 # Reference datastore layout constant (utils/main.go:981-984).
 FILES_PER_PARTITION = 64_000
@@ -46,15 +49,6 @@ def read_ledger_files(spark: SparkSession, path: str) -> DataFrame:
             F.col("content"),
         )
     )
-
-
-def real_lcm_decoder(raw: bytes) -> dict:
-    """Default decoder: the pure-Python RFC 4506 parser over the real
-    LedgerCloseMeta wire format (sources/xdr.py) — header + tx-envelope
-    subset, no SDK needed."""
-    from stellar_etl_spark.sources.xdr import real_lcm_decoder as _decode
-
-    return _decode(raw)
 
 
 def fake_lcm_decoder(raw: bytes) -> dict:

@@ -27,9 +27,12 @@ Usage::
     stream = (spark.readStream.format("stellar_ledgers")
               .option("path", "/data/ledgers").load())
 
-The XDR decode uses the same pluggable stand-in as ``sources.bronze``
-(the stellar SDK is not in this container); the source plumbing — schema,
-planning, partitioning, offsets — is real and tested.
+The source takes ``sequence`` from the file name and passes the file
+bytes through as ``lcm_xdr``, which the silver decoders parse with the
+pure-Python XDR parser.  It does not parse the header: ``closed_at``,
+``protocol_version`` and ``tx_count`` come from the deterministic stand-in
+``sources.bronze.fake_lcm_decoder``, not from the ledger.  The source
+plumbing — schema, planning, partitioning, offsets — is real and tested.
 """
 
 from __future__ import annotations

@@ -46,7 +46,11 @@ from stellar_etl_spark.functions.strkey import (
 )
 from stellar_etl_spark.schemas import OPERATIONS_DDL, TRANSACTIONS_DDL
 from stellar_etl_spark.sources.op_result_codes import trace_code_name
-from stellar_etl_spark.sources.xdr import Writer, parse_ledger_close_meta
+from stellar_etl_spark.sources.xdr import (
+    PUBLIC_PASSPHRASE,
+    Writer,
+    parse_ledger_close_meta,
+)
 from stellar_etl_spark.sources.xdr_ledger import (
     TX_RESULT_CODE_NAMES as _TX_CODES,
 )
@@ -651,7 +655,7 @@ def _per_ledger(
 
 
 def decode_transactions(
-    bronze: DataFrame, passphrase: str = "Public Global Stellar Network ; September 2015"
+    bronze: DataFrame, passphrase: str = PUBLIC_PASSPHRASE
 ) -> DataFrame:
     """One TRANSACTIONS_DDL row per envelope (GetTransactions surface,
     input/transactions.go) from raw LCM bytes — results, fees, soroban fee
@@ -989,7 +993,7 @@ def _soroban_op_extras(
 
 
 def decode_operations(
-    bronze: DataFrame, passphrase: str = "Public Global Stellar Network ; September 2015"
+    bronze: DataFrame, passphrase: str = PUBLIC_PASSPHRASE
 ) -> DataFrame:
     """One OPERATIONS_DDL row per operation from raw LCM bytes
     (GetOperations surface, input/operations.go) — with per-op result codes,
@@ -1090,8 +1094,6 @@ from stellar_etl_spark.sources.xdr import (  # noqa: E402
     Writer,
     transaction_hash,
 )
-
-PUBLIC_PASSPHRASE = "Public Global Stellar Network ; September 2015"
 
 _ASSET_TYPE_NAMES = {
     "native": "native",
@@ -1749,7 +1751,7 @@ def _classify_sac_event(topics: list[dict], data: dict) -> dict:
 
 
 def decode_contract_events(
-    bronze: DataFrame, passphrase: str = "Public Global Stellar Network ; September 2015"
+    bronze: DataFrame, passphrase: str = PUBLIC_PASSPHRASE
 ) -> DataFrame:
     """One CONTRACT_EVENTS_DDL row per Soroban contract/diagnostic event
     from the apply meta (the TransformContractEvent / token-transfer input

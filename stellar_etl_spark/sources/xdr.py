@@ -173,6 +173,10 @@ class Writer:
 KEY_TYPE_ED25519 = 0
 KEY_TYPE_MUXED_ED25519 = 0x100
 
+# Mainnet network passphrase: its sha256 is the network id that prefixes
+# every hashed payload (transaction_hash, contract-id preimages).
+PUBLIC_PASSPHRASE = "Public Global Stellar Network ; September 2015"
+
 # EnvelopeType (Stellar-transaction.x)
 ENVELOPE_TYPE_TX_V0 = 0
 ENVELOPE_TYPE_TX = 2

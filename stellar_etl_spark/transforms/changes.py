@@ -21,6 +21,7 @@ from stellar_etl_spark.functions.strkey import (
     strkey_claimable_udf,
     strkey_pool_udf,
 )
+from stellar_etl_spark.sources.xdr import PUBLIC_PASSPHRASE
 
 REMOVED = 2
 
@@ -322,8 +323,6 @@ def transform_contract_code(changes: DataFrame) -> DataFrame:
         *_common(e),
     )
 
-
-PUBLIC_PASSPHRASE = "Public Global Stellar Network ; September 2015"
 
 # XDR int32 tags used in the contract-id preimage (public XDR definitions:
 # Stellar-transaction.x ENVELOPE_TYPE_CONTRACT_ID = 16,

@@ -32,6 +32,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from stellar_etl_spark.sources.xdr import PUBLIC_PASSPHRASE
+
 EPOCH = 1704067200  # 2024-01-01T00:00:00Z
 
 _ASSET_T = "struct<asset_type:string,asset_code:string,asset_issuer:string>"
@@ -770,9 +772,7 @@ def _hashlib_sac_ids() -> tuple[bytes, list[bytes]]:
     derived_soroban_changes can emit (native + TK0-9 x ISS0-6)."""
     import hashlib
 
-    network = hashlib.sha256(
-        b"Public Global Stellar Network ; September 2015"
-    ).digest()
+    network = hashlib.sha256(PUBLIC_PASSPHRASE.encode()).digest()
 
     def cid(asset_xdr: bytes) -> bytes:
         return hashlib.sha256(

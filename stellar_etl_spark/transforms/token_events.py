@@ -39,10 +39,8 @@ from stellar_etl_spark.functions.strkey import (
     strkey_contract_udf,
     strkey_payload_udf,
 )
-from stellar_etl_spark.transforms.changes import (
-    PUBLIC_PASSPHRASE,
-    _asset_contract_id,
-)
+from stellar_etl_spark.sources.xdr import PUBLIC_PASSPHRASE
+from stellar_etl_spark.transforms.changes import _asset_contract_id
 
 # Trade-capable ops: every claimed atom emits a transfer PAIR (seller →
 # taker of the asset sold, taker → seller of the asset bought), and path
