@@ -11,7 +11,8 @@ The decode step is pluggable: any callable ``bytes -> dict``.  The default,
 ``real_lcm_decoder``, is the pure-Python LedgerCloseMeta XDR parser
 (sources/xdr.py).  ``fake_lcm_decoder`` is a deterministic stand-in that
 derives header fields from the raw bytes; tests use it for plumbing, and
-the ``stellar_ledgers`` DataSource still fills its header columns from it.
+the ``stellar_ledgers`` DataSource fills ``closed_at``, ``protocol_version``
+and ``tx_count`` from it.
 """
 
 from __future__ import annotations
