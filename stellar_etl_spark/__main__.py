@@ -10,8 +10,11 @@ ledger — the reference's datastore layout, utils/main.go:981-984).  The CLI
 feeds the raw file bytes straight to the silver decode (sources/silver.py;
 each silver table parses each ledger once, as input/ledgers.go:25 does)
 and runs the same export pipelines the library exposes
-(plans/pipelines.py).  The ``rows`` it prints is the count observed inside
-the write job itself, so an export is not re-run to count it.
+(plans/pipelines.py).  ``export_transactions`` and ``export_trades`` decode
+one silver table, whose rows carry their ledger header, so they parse each
+ledger once in one Spark job.  The ``rows`` it prints is the count
+observed inside the write job itself, so an export is not re-run to count
+it.  ``main`` stops the session only when it created it.
 ``get_ledger_range_from_times`` takes ``--start-time/--end-time`` (RFC3339
 or unix seconds) instead of a ledger range, mirroring
 cmd/get_ledger_range_from_times.go.
@@ -91,13 +94,17 @@ def main(argv: list[str] | None = None) -> None:
     fmt = "both" if args.both else ("parquet" if args.parquet else "json")
     extra = _parse_extra_fields(args.extra_fields) or None
 
+    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
     from stellar_etl_spark.session import get_spark
     from stellar_etl_spark.sources.bronze import read_ledger_files
 
+    # an in-process caller's active session is borrowed, never stopped
+    owned = SparkSession.getActiveSession() is None
     spark = get_spark("stellar-etl-cli", cpus=args.cpus)
-    spark.sparkContext.setLogLevel("WARN")
+    if owned:
+        spark.sparkContext.setLogLevel("WARN")
     raw = read_ledger_files(spark, args.ledgers_dir).select(
         F.col("content").alias("lcm_xdr")
     )
@@ -135,7 +142,8 @@ def main(argv: list[str] | None = None) -> None:
         )
         q.awaitTermination()
         print(json.dumps({"streamed": True, "command": cmd, "output": out}))
-        spark.stop()
+        if owned:
+            spark.stop()
         return
 
     df = _dispatch(raw)
@@ -144,7 +152,8 @@ def main(argv: list[str] | None = None) -> None:
         # the write job itself
         n = df.export_stats["successful"]
         print(json.dumps({"command": cmd, "rows": n, "output": out, "fmt": fmt}))
-    spark.stop()
+    if owned:
+        spark.stop()
 
 
 def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
@@ -163,8 +172,9 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
             out, s, e, fmt, args.strict_export, extra, **extra_kw,
         )
     elif cmd == "export_transactions":
+        # the header columns ride on the transaction rows: one parse, one job
         return EXPORT_PIPELINES[cmd](
-            silver.decode_transactions(bronze), silver.decode_ledgers(bronze),
+            silver.decode_transactions(bronze), None,
             out, s, e, fmt, args.strict_export, extra, **extra_kw,
         )
     elif cmd == "export_ledger_transactions":
@@ -179,7 +189,7 @@ def _dispatch_cmd(cmd, bronze, spark, args, out, s, e, fmt, extra, mode):
         )
     elif cmd == "export_trades":
         return EXPORT_PIPELINES[cmd](
-            silver.decode_operations(bronze), silver.decode_ledgers(bronze),
+            silver.decode_operations(bronze), None,
             out, s, e, fmt, extra, **extra_kw,
         )
     elif cmd == "export_assets":

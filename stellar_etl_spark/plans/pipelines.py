@@ -10,7 +10,10 @@ partition-prunable filter, and write JSONL and/or Parquet exactly like
 Shape notes: a table export runs one write job per output format, plus one
 job per broadcast join side, and no count job — the rows written are
 observed inside the write job (sources/sinks.export_with_stats).
-``export_transactions`` is two jobs: the ledgers broadcast and the write.
+``export_transactions`` and ``export_trades`` take ``ledgers=None`` from
+the CLI: the ledger header rides on the silver rows, so each is one job
+(one parse per ledger) with no ledgers broadcast.  ``--both`` persists the
+transformed frame across its two writes, so the decode still runs once.
 The range filter reaches the scan; only the aggregation/explode steps
 shuffle (see tests/test_plans.py).
 """
@@ -60,13 +63,20 @@ def _sink(
 ) -> DataFrame:
     """Write ``df`` as ``<name>.jsonl`` and/or ``<name>.parquet`` and return
     it, with the transform stats observed in the write job as
-    ``df.export_stats``."""
+    ``df.export_stats``.  ``fmt="both"`` persists ``df`` for the two
+    writes, so its input is decoded once, not once per format."""
     path = os.path.join(out_dir, name)
-    for f, ext in (("json", ".jsonl"), ("parquet", ".parquet")):
-        if fmt in (f, "both"):
-            df.export_stats = export_with_stats(
-                df, path + ext, F.lit(True), f, extra_fields, mode
-            )
+    if fmt == "both":
+        df.persist()
+    try:
+        for f, ext in (("json", ".jsonl"), ("parquet", ".parquet")):
+            if fmt in (f, "both"):
+                df.export_stats = export_with_stats(
+                    df, path + ext, F.lit(True), f, extra_fields, mode
+                )
+    finally:
+        if fmt == "both":
+            df.unpersist()
     return df
 
 
@@ -82,6 +92,8 @@ def export_ledgers(ledgers, transactions, out_dir, start=0, end=0, fmt="json",
 def export_transactions(transactions, ledgers, out_dir, start=0, end=0,
                         fmt="json", strict=False, extra_fields=None,
                         mode="overwrite") -> DataFrame:
+    """cmd/export_transactions.go equivalent; ``ledgers=None`` reads the
+    header columns off the silver transaction rows (transform_transaction)."""
     out = transform_transaction(_range(transactions, start, end), ledgers, strict)
     return _sink(out, out_dir, "transactions", fmt, extra_fields, mode=mode)
 
@@ -107,6 +119,8 @@ def export_effects(operations, transactions, out_dir, start=0, end=0,
 
 def export_trades(operations, ledgers, out_dir, start=0, end=0,
                   fmt="json", extra_fields=None, mode="overwrite") -> DataFrame:
+    """cmd/export_trades.go equivalent; ``ledgers=None`` reads the close
+    time off the silver operation rows (transform_trade)."""
     out = transform_trade(_range(operations, start, end), ledgers)
     return _sink(out, out_dir, "trades", fmt, extra_fields, mode=mode)
 

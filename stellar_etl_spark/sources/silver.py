@@ -334,6 +334,7 @@ def _tx_row(
         tx_fee_meta=blobs.get("tx_fee_meta"),
         tx_ledger_history=None,
         closed_at_unix=closed_at_unix,
+        protocol_version=ledger_version,
     )
 
 
@@ -659,7 +660,12 @@ def decode_transactions(
 ) -> DataFrame:
     """One TRANSACTIONS_DDL row per envelope (GetTransactions surface,
     input/transactions.go) from raw LCM bytes — results, fees, soroban fee
-    ext, and the four canonical base64 blobs filled from txProcessing."""
+    ext, and the four canonical base64 blobs filled from txProcessing.
+
+    Two ledger-header columns follow the TRANSACTIONS_DDL ones:
+    ``closed_at_unix`` (the header's close time, unix seconds) and
+    ``protocol_version`` (its ledger version), so ``transform_transaction``
+    needs no separate ledgers decode."""
 
     def rows(meta: dict) -> Iterator[dict]:
         h = meta["header"]
@@ -671,7 +677,8 @@ def decode_transactions(
             )
 
     return _per_ledger(
-        bronze, TRANSACTIONS_DDL + ", closed_at_unix long", rows,
+        bronze, TRANSACTIONS_DDL + ", closed_at_unix long, protocol_version long",
+        rows,
         exact_int64=_TX_INT64_COLS,
     )
 
@@ -999,7 +1006,11 @@ def decode_operations(
     (GetOperations surface, input/operations.go) — with per-op result codes,
     claim atoms from offer/path-payment results (the trades input), and the
     op's paired ledger-entry changes (the sponsor/effects/trade price scan
-    input) from the apply meta."""
+    input) from the apply meta.
+
+    One ledger-header column follows the OPERATIONS_DDL ones:
+    ``closed_at_unix`` (the header's close time, unix seconds), so
+    ``transform_trade`` needs no separate ledgers decode."""
 
     def rows(meta: dict) -> Iterator[dict]:
         h = meta["header"]
@@ -1076,9 +1087,10 @@ def decode_operations(
                     },
                     claim_atoms=atoms,
                     changes=changes,
+                    closed_at_unix=h.close_time,
                 )
 
-    return _per_ledger(bronze, OPERATIONS_DDL, rows)
+    return _per_ledger(bronze, OPERATIONS_DDL + ", closed_at_unix long", rows)
 
 
 # ---------------------------------------------------------------------------

@@ -119,9 +119,10 @@ def _effect_dyn(kind_col: Column, address: Column, details: Column) -> Column:
     )
 
 
-def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
+def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None, seen: set):
     """Details-building context for one _effects_array_expr build: returns
-    ``(j, empty_details, details_ddl)``.
+    ``(j, empty_details, details_ddl)``.  Every ``j(**kv)`` call adds its
+    keys to ``seen``, so the build knows which detail names it emits.
 
     Two modes, keyed on ``detail_types``:
 
@@ -138,6 +139,7 @@ def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
     if detail_types is not None:
 
         def j(**kv) -> Column:
+            seen.update(kv)
             return F.struct(
                 *[
                     (kv[n] if n in kv else F.lit(None)).cast(t).alias(n)
@@ -149,6 +151,7 @@ def _detail_ctx(detail_types: tuple[tuple[str, str], ...] | None):
         return j, j(), ddl
 
     def j(**kv) -> Column:
+        seen.update(kv)
         return F.to_json(
             F.struct(*[v.alias(k) for k, v in kv.items()]),
             {"ignoreNullFields": "true"},
@@ -205,11 +208,32 @@ def _effects_array_expr(
     ``detail_types`` (None = JSON details): emit details as a typed STRUCT
     of exactly these (name, ddl_type) fields instead of a JSON string —
     kills the serialize-then-parse round trip for callers that consume a
-    fixed field set (see _detail_ctx for the value-equivalence argument)."""
-    return _effects_array_expr_impl(
+    fixed field set (see _detail_ctx for the value-equivalence argument).
+    A ``detail_types`` name that no effect builder emits raises
+    ``ValueError``: its field would otherwise be null on every row."""
+    seen: set[str] = set()
+    expr = _effects_array_expr_impl(
         changes_type, atoms_type, present, has_changes, has_atoms,
-        detail_types,
+        detail_types, seen,
     )
+    if detail_types is not None:
+        unknown = {n for n, _ in detail_types} - seen
+        if unknown and (present is not None or not has_changes or not has_atoms):
+            # a pruned build skips whole families: ask the full one
+            unknown -= _emitted_detail_names(changes_type, atoms_type)
+        if unknown:
+            raise ValueError(
+                f"no effect emits detail field(s) {sorted(unknown)}"
+            )
+    return expr
+
+
+@lru_cache(maxsize=4)
+def _emitted_detail_names(changes_type: str, atoms_type: str) -> frozenset:
+    """Every detail name the unpruned effects build emits."""
+    seen: set[str] = set()
+    _effects_array_expr_impl(changes_type, atoms_type, None, True, True, None, seen)
+    return frozenset(seen)
 
 
 def _effects_array_expr_impl(
@@ -218,9 +242,10 @@ def _effects_array_expr_impl(
     present: frozenset | None,
     has_changes: bool,
     has_atoms: bool,
-    detail_types: tuple[tuple[str, str], ...] | None = None,
+    detail_types: tuple[tuple[str, str], ...] | None,
+    seen: set,
 ) -> Column:
-    _j, _empty_details, _details_ddl = _detail_ctx(detail_types)
+    _j, _empty_details, _details_ddl = _detail_ctx(detail_types, seen)
     body = F.col("body")
     source = F.coalesce(F.col("source_account"), F.col("_tx_source"))
     t = F.col("type")

@@ -4,7 +4,10 @@ Claim atoms explode 1→N per trade-capable op of a successful tx; the sell
 price comes from the LAST change whose pre-state matches the sold offer —
 the reference's reverse scan (trade.go:281-304) expressed as an array
 ``filter`` + ``element_at(-1)`` over the op's co-indexed change array: pure
-struct-internal correlation, no join, no shuffle.
+struct-internal correlation, no join, no shuffle.  ``ledger_closed_at``
+comes from a broadcast join to ``ledgers`` when a ledgers frame is passed,
+else from the ``closed_at_unix`` column ``silver.decode_operations`` puts
+on every operation row.
 """
 
 from __future__ import annotations
@@ -30,10 +33,15 @@ def _aid(asset):
 
 def transform_trade(
     operations: DataFrame,
-    ledgers: DataFrame,
+    ledgers: DataFrame | None = None,
     transactions: DataFrame | None = None,
 ) -> DataFrame:
     """One row per claim atom of trade-capable ops in successful txs.
+
+    Header source: with ``ledgers`` given, ledger_closed_at comes from the
+    inner broadcast join on ``sequence`` (an op whose ledger is absent is
+    dropped); with ``ledgers=None`` it is the op row's own
+    ``closed_at_unix`` (the silver decode emits it), and every op is kept.
 
     - gate: op type ∈ {2,3,4,12,13} and tx successful (input/trades.go:89-104,
       trade.go:27-29)
@@ -49,10 +57,6 @@ def transform_trade(
       rounding_slippage bips from the CAP-38 payout over the pool's
       pre-change reserves (trade.go:350-399)
     """
-    hdr = ledgers.select(
-        F.col("sequence").alias("_seq"), F.col("closed_at").alias("_closed_at")
-    )
-
     tradable = operations.where(
         F.col("type").isin(*TRADE_OP_TYPES) & F.col("tx_successful")
     )
@@ -103,9 +107,20 @@ def transform_trade(
         else F.lit(None).cast("long")
     )
 
+    if ledgers is None:
+        tradable = tradable.withColumn(
+            "_closed_at", F.timestamp_seconds("closed_at_unix")
+        )
+    else:
+        hdr = ledgers.select(
+            F.col("sequence").alias("_seq"), F.col("closed_at").alias("_closed_at")
+        )
+        tradable = tradable.join(
+            F.broadcast(hdr), tradable.ledger_sequence == hdr._seq
+        )
+
     exploded = (
-        tradable.join(F.broadcast(hdr), tradable.ledger_sequence == hdr._seq)
-        .select(
+        tradable.select(
             "ledger_sequence",
             "tx_index",
             "op_index",

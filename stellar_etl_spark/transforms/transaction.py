@@ -2,8 +2,11 @@
 transaction.go:20-275): memo switch, time/ledger-bounds interval strings,
 fee-bump fields, Soroban fee decomposition, pre-protocol-21 fee-bump fix.
 
-Everything is a single narrow select over the tx row joined (broadcast) to
-its ledger header for closed_at/protocol — no fan-out, no wide shuffle.
+Everything is a single narrow select over the tx row — no fan-out, no
+wide shuffle.  closed_at and the protocol version come from the ledger
+header: from a broadcast join to ``ledgers`` when a ledgers frame is
+passed, else from the ``closed_at_unix`` / ``protocol_version`` columns
+``silver.decode_transactions`` puts on every transaction row.
 """
 
 from __future__ import annotations
@@ -21,9 +24,18 @@ def _z(col):
 
 
 def transform_transaction(
-    transactions: DataFrame, ledgers: DataFrame, strict: bool = False
+    transactions: DataFrame,
+    ledgers: DataFrame | None = None,
+    strict: bool = False,
 ) -> DataFrame:
     """One output row per transaction.
+
+    Header source: with ``ledgers`` given, closed_at and protocol_version
+    come from the inner broadcast join on ``sequence`` (a transaction
+    whose ledger is absent is dropped); with ``ledgers=None`` they come
+    from the transaction row's own ``closed_at_unix`` and
+    ``protocol_version`` (the silver decode emits both), and every row
+    is kept.
 
     - id = TOID(ledger, tx_index, 0) (toid/main.go:130-157)
     - memo switch (transaction.go:74-89): memo_type 'none' clears the memo
@@ -35,12 +47,6 @@ def transform_transaction(
       compensates the core bug by recomputing resource_fee − refund
       (transaction.go:185-190)
     """
-    hdr = ledgers.select(
-        F.col("sequence").alias("_seq"),
-        F.col("closed_at").alias("_closed_at"),
-        F.col("protocol_version").alias("_protocol"),
-    )
-
     bad_bounds = (
         F.col("time_bounds_max").isNotNull()
         & (F.col("time_bounds_max") != 0)
@@ -54,6 +60,19 @@ def transform_transaction(
             F.raise_error(F.lit("max time bound < min (transaction.go:93-104)")),
         ).otherwise(bad_bounds),
     ).where(~F.col("_bad_bounds"))
+    if ledgers is None:
+        tx = tx.select(
+            "*",
+            F.timestamp_seconds("closed_at_unix").alias("_closed_at"),
+            F.col("protocol_version").alias("_protocol"),
+        )
+    else:
+        hdr = ledgers.select(
+            F.col("sequence").alias("_seq"),
+            F.col("closed_at").alias("_closed_at"),
+            F.col("protocol_version").alias("_protocol"),
+        )
+        tx = tx.join(F.broadcast(hdr), tx.ledger_sequence == hdr._seq, "inner")
 
     soroban_fix = (
         (F.col("_protocol") < 21)
@@ -61,7 +80,7 @@ def transform_transaction(
         & F.col("has_soroban")
     )
 
-    return tx.join(F.broadcast(hdr), tx.ledger_sequence == hdr._seq, "inner").select(
+    return tx.select(
         toid(F.col("ledger_sequence"), F.col("tx_index"), 0).alias("id"),
         F.col("transaction_hash"),
         F.col("ledger_sequence"),

@@ -148,9 +148,10 @@ class TestCliWriteJob:
     inside it (no post-write count), and silver reads the raw file bytes
     (no bronze header pass)."""
 
-    def test_export_transactions_runs_two_jobs(self, xdr_dir, tmp_path):
-        """The ledgers broadcast and the write — counted in Spark's event
-        log of the CLI process."""
+    def test_export_transactions_runs_one_job(self, xdr_dir, tmp_path):
+        """Only the write: the ledger header rides on the transaction rows,
+        so no ledgers broadcast runs — counted in Spark's event log of the
+        CLI process."""
         logs = tmp_path / "eventlog"
         logs.mkdir()
         res = _cli(
@@ -167,7 +168,7 @@ class TestCliWriteJob:
         (log,) = glob.glob(str(logs / "*"))
         with open(log) as fh:
             events = [json.loads(line)["Event"] for line in fh]
-        assert events.count("SparkListenerJobStart") == 2
+        assert events.count("SparkListenerJobStart") == 1
 
     @pytest.mark.parametrize("flag, dirs", [
         (None, ["transactions.jsonl"]),
@@ -200,3 +201,63 @@ class TestCliWriteJob:
         assert res.returncode != 0
         assert not glob.glob(str(tmp_path / "out" / "transactions.jsonl"
                                  / "part-*"))
+
+
+# Installed first on the CLI's PYTHONPATH: every Python process of the run
+# (driver and Spark workers) wraps the XDR parser before sources.silver
+# binds the name, and appends one byte per call to a per-process file.
+_PARSE_HOOK = """
+import os
+
+if os.environ.get("PARSE_COUNT_DIR"):
+    from stellar_etl_spark.sources import xdr as _xdr
+
+    _parse = _xdr.parse_ledger_close_meta
+
+    def parse_ledger_close_meta(raw, tx_processing=True):
+        path = os.path.join(os.environ["PARSE_COUNT_DIR"], f"parses-{os.getpid()}")
+        with open(path, "ab") as fh:
+            fh.write(b".")
+        return _parse(raw, tx_processing)
+
+    _xdr.parse_ledger_close_meta = parse_ledger_close_meta
+"""
+
+
+class TestCliParsesOnce:
+    """An export parses each ledger once: the header columns ride on the
+    silver rows, and ``--both`` persists the frame across its two writes."""
+
+    @pytest.mark.parametrize("args", [
+        ["export_transactions"],
+        ["export_trades"],
+        ["export_transactions", "--both"],
+    ], ids=["transactions", "trades", "transactions-both"])
+    def test_one_parse_per_ledger(self, xdr_dir, tmp_path, args):
+        hook, counts = tmp_path / "hook", tmp_path / "parses"
+        hook.mkdir()
+        counts.mkdir()
+        (hook / "sitecustomize.py").write_text(_PARSE_HOOK)
+        path = [str(hook), REPO, os.environ.get("PYTHONPATH", "")]
+        res = _cli(
+            [args[0], "--ledgers-dir", xdr_dir,
+             "--output", str(tmp_path / "out"), *args[1:]],
+            PYTHONPATH=os.pathsep.join(p for p in path if p),
+            PARSE_COUNT_DIR=str(counts),
+        )
+        assert res.returncode == 0, res.stderr[-2000:]
+        parses = sum(f.stat().st_size for f in counts.iterdir())
+        assert parses == len(glob.glob(os.path.join(xdr_dir, "*.xdr")))
+
+
+class TestMainInProcess:
+    def test_main_keeps_callers_session(self, spark, xdr_dir, tmp_path,
+                                        capsys):
+        """``main`` called under an active session borrows it: the export
+        runs, and the caller's session still runs queries afterwards."""
+        from stellar_etl_spark.__main__ import main
+
+        main(["export_transactions", "--ledgers-dir", xdr_dir,
+              "--output", str(tmp_path), "--cpus", "4"])
+        assert _printed_rows(capsys.readouterr().out) == 30
+        assert spark.range(3).count() == 3

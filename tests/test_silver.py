@@ -99,6 +99,63 @@ def bronze(spark, tmp_path_factory):
     return decode_ledger_files(read_ledger_files(spark, str(tmp)))
 
 
+def _assert_header_paths_equal(bronze) -> tuple[int, int]:
+    """``transform_transaction`` / ``transform_trade`` without a ledgers
+    frame read the header columns the silver decode puts on each row; both
+    must equal the broadcast-join path over ``decode_ledgers`` of the same
+    bytes (``exceptAll`` empty both ways).  Returns (transactions, trades)."""
+    from stellar_etl_spark.sources.silver import decode_ledgers
+    from stellar_etl_spark.transforms.trade import transform_trade
+    from stellar_etl_spark.transforms.transaction import transform_transaction
+
+    ledgers = decode_ledgers(bronze)
+    txs, ops = decode_transactions(bronze), decode_operations(bronze)
+    counts = []
+    for on_rows, joined in (
+        (transform_transaction(txs), transform_transaction(txs, ledgers)),
+        (transform_trade(ops), transform_trade(ops, ledgers)),
+    ):
+        assert on_rows.schema == joined.schema
+        assert on_rows.exceptAll(joined).count() == 0
+        assert joined.exceptAll(on_rows).count() == 0
+        counts.append(on_rows.count())
+    return counts[0], counts[1]
+
+
+class TestHeaderOnRows:
+    def test_bench_corpus(self, spark, tmp_path):
+        import os
+        import sys
+
+        sys.path.insert(0, os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+        ))
+        from bench_decode import build_ledgers
+
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+
+        build_ledgers(str(tmp_path), 6)
+        raw = read_ledger_files(spark, str(tmp_path)).select(
+            F.col("content").alias("lcm_xdr")
+        )
+        # 6 ledgers x 5 transactions; the ops carry no results, so no trades
+        assert _assert_header_paths_equal(raw) == (30, 0)
+
+    def test_golden_lcms(self, spark, tmp_path):
+        from golden_lcm import have_goldens, write_golden_ledger_dir
+
+        from stellar_etl_spark.sources.bronze import read_ledger_files
+
+        if not have_goldens():
+            pytest.skip("reference goldens absent")
+        write_golden_ledger_dir(str(tmp_path))
+        raw = read_ledger_files(spark, str(tmp_path)).select(
+            F.col("content").alias("lcm_xdr")
+        )
+        n_tx, _ = _assert_header_paths_equal(raw)
+        assert n_tx > 0
+
+
 class TestDecodeLedgers:
     def test_header_surface_feeds_transform_ledger(self, spark, bronze):
         """decode_ledgers emits the full LEDGERS_DDL header row (hex
@@ -410,6 +467,11 @@ class TestFullDecode:
         assert chg.entry_type == "offer"
         assert (chg.pre.price_n, chg.pre.price_d) == (1, 2)
         assert chg.post is None  # removed
+
+    def test_header_on_rows_equals_ledgers_join(self, bronze):
+        """A ledger with a crossed offer: the trade half is not empty."""
+        n_tx, n_trades = _assert_header_paths_equal(bronze)
+        assert (n_tx, n_trades) == (2, 1)
 
     def test_trades_from_wire_bytes(self, spark, bronze):
         """transform_trade runs end to end on decoded ops: the atom explodes

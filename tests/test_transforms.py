@@ -468,6 +468,15 @@ class TestEffects:
                 want = fd.get(name)
                 assert r["details"][name] == want, (r["id"], name)
 
+    def test_detail_types_unknown_name_raises(self, data):
+        """A detail name no effect builder emits would be an all-null
+        field; the build rejects it and names it."""
+        with pytest.raises(ValueError, match="amuont"):
+            transform_effects(
+                data["operations"], data["transactions"],
+                detail_types=[("amount", "string"), ("amuont", "string")],
+            )
+
     def test_present_probe_sees_rewritten_path(self, spark, data, tmp_path):
         """The op-type probe runs per call: after the operations parquet at
         one path is rewritten with a new op type, a fresh read of that path
