@@ -476,6 +476,12 @@ class TestEffects:
                 data["operations"], data["transactions"],
                 detail_types=[("amount", "string"), ("amuont", "string")],
             )
+        # a real name whose family the pruned build skips is accepted:
+        # only bump_sequence emits new_seq, and payments are all there is
+        payments = data["operations"].where("type = 1")
+        transform_effects(
+            payments, data["transactions"], detail_types=[("new_seq", "long")]
+        )
 
     def test_present_probe_sees_rewritten_path(self, spark, data, tmp_path):
         """The op-type probe runs per call: after the operations parquet at
